@@ -404,6 +404,36 @@ class CrawlEngine:
             return full
         return max(1, min(full, (n_rows + rows_per_part - 1) // rows_per_part))
 
+    def _replay(self, rows: DataFrame, n_rows: int | None) -> DataFrame:
+        """Cache-hit replay of request *rows* (REQUEST cols + ``_blk``)
+        against the body source (make_replay_fn). The slim replay rows
+        (``_src=1``) are unioned with each replayed url's single
+        store/pages row (``_src=0``, pre-filtered by a broadcast semi-join
+        of the slim url set), hash-partitioned on url_canon and sorted by
+        (url_canon, _src), so every url's body row precedes its replay rows
+        inside one partition and one ``mapInPandas`` evaluates them — a
+        page body crosses exactly one exchange, once per url, and is never
+        joined per path or duplicated. Identical semantics to a fresh fetch
+        because fetch memoization replays the SAME response per url
+        (browser-services.rkt:36-40)."""
+        rows = rows.select(
+            "pc", "url_canon", "url_full", "bindings", "path_key",
+            "method", "cookies", "_blk",
+        )
+        bodies = self._body_source().join(
+            F.broadcast(rows.select("url_canon").distinct()),
+            "url_canon", "left_semi",
+        )
+        return (
+            bodies.withColumn("_src", F.lit(0))
+            .unionByName(
+                rows.withColumn("_src", F.lit(1)), allowMissingColumns=True
+            )
+            .repartition(self._round_parts(n_rows), "url_canon")
+            .sortWithinPartitions("url_canon", "_src")
+            .mapInPandas(self._replay_fn.stream, CASCADE_SCHEMA)
+        )
+
     def _round(self, requests: DataFrame, rnd: int, n_req: int | None = None):
         import time as _t
         _marks = [("start", _t.time())]
@@ -534,13 +564,13 @@ class CrawlEngine:
         ok = routed.where(F.col("_ok"))
         deferred = routed.where(F.col("_ok").isNull())
 
-        # attach bodies via the cogrouped replay (make_replay_fn): slim
-        # request rows grouped with the pages table's single row per url —
-        # each page body crosses one exchange and enters Python once per
-        # url, never a per-path join or a body-carrying sort. Missing page
-        # (404) => empty body; robots-blocked urls (any round's block: the
-        # seen sink already holds this round's delta) traverse with an
-        # empty body even when the snapshot table has content for them.
+        # attach bodies via the streamed replay (_replay): slim request rows
+        # merged with the pages table's single row per url — each page body
+        # crosses one exchange and enters Python once per url, never a
+        # per-path join. Missing page (404) => empty body; robots-blocked
+        # urls (any round's block: the seen sink already holds this round's
+        # delta) traverse with an empty body even when the snapshot table
+        # has content for them.
         if self.robots is not None:
             blocked_all = self._read_sink("seen").where(F.col("status") == 999)
             ok = (
@@ -553,19 +583,7 @@ class CrawlEngine:
             )
         else:
             ok = ok.withColumn("_blk", F.lit(False))
-        ok_urls = ok.select("url_canon").distinct()
-        pages_src = self._body_source().join(
-            F.broadcast(ok_urls), "url_canon", "left_semi"
-        )
-        ok_slim = ok.select(
-            "pc", "url_canon", "url_full", "bindings", "path_key",
-            "method", "cookies", "_blk",
-        )
-        out1 = (
-            ok_slim.groupby("url_canon")
-            .cogroup(pages_src.groupby("url_canon"))
-            .applyInPandas(self._replay_fn, CASCADE_SCHEMA)
-        )
+        out1 = self._replay(ok, n_req)
 
         # results-sink keys: (rnd+1)*1000+gen — the pre-round init cascade
         # owns the 0..999 key space
@@ -606,13 +624,13 @@ class CrawlEngine:
         and persist to the store sink — the crash-resumable page cache.
         CACHE-HIT traversals (urls fetched in an earlier round, or
         robots-blocked replays) never reach fetch_fn: they evaluate through
-        the cogrouped store replay (make_replay_fn) — the memoized replay
-        of browser-services.rkt:36-40, correct for live/non-deterministic
+        the streamed store replay (``_replay``) — the memoized replay of
+        browser-services.rkt:36-40, correct for live/non-deterministic
         fetchers (round 1 re-fetched cache hits, bypassing the politeness
         budget). All routing frames are slim; body bytes flow
         fetch→Arrow→store once, and per replaying round each body crosses
-        one cogroup exchange + one Arrow boundary — never a per-path join,
-        a body sort, or a dedup shuffle."""
+        one url-partitioned exchange + one Arrow boundary, once per url —
+        never a per-path join or a dedup shuffle."""
         decided = selected.select(
             "url_canon", F.lit(True).alias("_fresh"), F.lit(False).alias("_blk")
         ).unionByName(
@@ -631,7 +649,7 @@ class CrawlEngine:
         # a segment — fresh (politeness winner, gets the fused fetch+eval),
         # jvmrep (cache hit whose exact input state is in the eval-output
         # memo: replayed by a pure JVM join), pyrep (cache hit that needs
-        # the cogrouped Python replay: memo miss or robots-blocked), or
+        # the streamed Python replay: memo miss or robots-blocked), or
         # deferred (over budget, back to the frontier) — and the whole
         # tagged frame is written once, hive-partitioned by ``seg``. The
         # rest of the round (eval job, seen chain, frontier checkpoint)
@@ -677,7 +695,7 @@ class CrawlEngine:
         # dominant wasted work, and this removes it entirely. Misses
         # (states never evaluated at fetch time, e.g. a branch arriving
         # with a different cookie jar) and robots-blocked branches fall
-        # back to the cogrouped Python replay, which is always exact.
+        # back to the streamed Python replay, which is always exact.
         # Hit-detection happens HERE, in the routing job, against the
         # DISTINCT memo input-state keys (filtered to this round's
         # candidate urls — a superset of the replay urls is safe: fresh and
@@ -728,7 +746,7 @@ class CrawlEngine:
         routed_path = self._path("cascade_tmp", f"routed={rnd}")
         # the routed rows are SLIM (no bodies) and every downstream consumer
         # re-partitions for its own needs (fresh → url_canon co-location,
-        # pyrep → cogroup exchange), so the write's partitioning is pure
+        # pyrep → replay exchange), so the write's partitioning is pure
         # task/file overhead: collapse to a few write tasks instead of
         # shuffle_partitions × segs tiny files + footers per round — at
         # politeness-bound (many-round, few-rows) tiers this is a per-round
@@ -772,33 +790,11 @@ class CrawlEngine:
                 .sortWithinPartitions("url_canon", "pc", "bindings")
                 .mapInPandas(self._fused_fn, CASCADE_SCHEMA)
             )
-        # cache-hit replay: COGROUPED with the store sink on url_canon
-        # (make_replay_fn) — each group is one url: slim replay rows on the
-        # left, the url's single store row (body/head/status) on the right.
-        # A page body crosses exactly one shuffle (the cogroup exchange of
-        # the one-row-per-url store side, pre-filtered to this round's
-        # replayed urls via a broadcast semi-join of the SLIM url set) and
-        # is never joined per path, never sorted, never duplicated —
-        # identical semantics to a fresh fetch because fetch memoization
-        # replays the SAME response per url (browser-services.rkt:36-40).
-        # Missing store row (url seen but never stored, e.g. robots-
-        # blocked) → empty body. The branch exists ONLY when the footers
-        # say there are pyrep rows — memo-covered rounds never plan the
-        # body-bearing store scan at all.
+        # cache-hit replay: streamed against the store sink (_replay). The
+        # branch exists ONLY when the footers say there are pyrep rows —
+        # memo-covered rounds never plan the body-bearing store scan at all.
         if segs.get("pyrep", 0):
-            py_replay = _seg("pyrep").select(
-                "pc", "url_canon", "url_full", "bindings", "path_key",
-                "method", "cookies", "_blk",
-            )
-            py_urls = py_replay.select("url_canon").distinct()
-            store_src = self._body_source().join(
-                F.broadcast(py_urls), "url_canon", "left_semi"
-            )
-            outs.append(
-                py_replay.groupby("url_canon")
-                .cogroup(store_src.groupby("url_canon"))
-                .applyInPandas(self._replay_fn, CASCADE_SCHEMA)
-            )
+            outs.append(self._replay(_seg("pyrep"), segs["pyrep"]))
         if memo_f is not None and segs.get("jvmrep", 0):
             jr = _seg("jvmrep")
             cond = (

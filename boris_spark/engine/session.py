@@ -19,6 +19,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of physical memory, at most 48g. A heap ceiling above the
+    host's RAM lets the collector grow the driver JVM until the kernel
+    kills it (a local-mode test session on a 16 GB host reached 15 GB)."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{max(1024, min(48 << 10, phys_mb // 2))}m"
+
+
 def get_spark(
     app: str = "boris-spark",
     cores: int | None = None,
@@ -66,7 +74,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # FAIR job scheduling: the crawl round's commit-pool jobs (seen
         # delta, frontier checkpoint) run from driver threads concurrently

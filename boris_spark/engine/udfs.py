@@ -55,7 +55,7 @@ _COLS = [
 # multi-generation outputs — exactly the class whose cache-hit replays can
 # run as a JVM join against the memo sink instead of re-evaluating bodies
 # in Python (let/for/label/recur/show produce 'apply' generations and
-# download emits the body itself, so they take the cogroup Python path)
+# download emits the body itself, so they take the streamed Python replay)
 MEMO_JOINABLE_KINDS = frozenset(
     {"go", "click", "submit", "extract", "extract_list"}
 )
@@ -63,36 +63,6 @@ MEMO_JOINABLE_KINDS = frozenset(
 
 def _hx(i: int) -> str:
     return f"{i:08x}"
-
-
-# -- env-gated executor-side timing (BORIS_UDF_TIMING=1): per-worker totals
-# printed at interpreter exit; local-mode stderr shows them at spark.stop()
-_TIMING: dict[str, float] = {}
-
-
-def _timing_enabled() -> bool:
-    import os
-
-    return bool(os.environ.get("BORIS_UDF_TIMING"))
-
-
-_T_FLUSH = [0.0]
-
-
-def _t_add(name: str, dt: float) -> None:
-    import os
-    import time
-
-    _TIMING[name] = _TIMING.get(name, 0.0) + dt
-    now = time.time()
-    if now - _T_FLUSH[0] > 2.0:  # workers get SIGKILLed; flush to disk
-        _T_FLUSH[0] = now
-        d = "/tmp/boris_udf_timing"
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, str(os.getpid())), "w") as f:
-            f.write(
-                " ".join(f"{k}={v:.2f}" for k, v in sorted(_TIMING.items()))
-            )
 
 
 def _out_row(kind: str, **kw) -> dict:
@@ -368,11 +338,7 @@ def make_fused_fn(
         # crawl" true across Arrow batch boundaries in O(1) memory (a url
         # spanning 3+ batches chains through, it is last in each).
         carry: dict[str, tuple] = {}
-        import time as _time
-
-        timing = _timing_enabled()
         for batch_idx, pdf in enumerate(batches):
-            _t0 = _time.time()
             out: list[dict] = []
             store_rows: list[tuple] = []
             cookies_col = (
@@ -403,9 +369,6 @@ def make_fused_fn(
                 resps = fetch_fn(need) if need else []
             fetched = dict(zip(need, resps))
             fetched.update(carry)
-            if timing:
-                _t_add("fused.fetch", _time.time() - _t0)
-                _t0 = _time.time()
             emitted: dict[str, int] = {}
             for pc, url, url_full, url_hash, host, bindings_json, path, method, cj in zip(
                 pdf["pc"], pdf["url_canon"], pdf["url_full"], pdf["url_hash"],
@@ -472,70 +435,73 @@ def make_fused_fn(
                         head=head, method=method, cookies_json=cj,
                     )
                 if emit_memo:
-                    # eval-output cache: once per distinct input state per
-                    # url, duplicate this row's outputs with suffix-only
-                    # paths + the state key — the memo sink later rounds
-                    # JOIN against (JVM concat of path prefixes) instead of
-                    # re-running the page through Python per replay branch.
-                    # The 'mark' row records states with ZERO outputs, so a
-                    # join miss means "state never evaluated", not "state
-                    # evaluated to nothing".
-                    skey = (int(pc), url_full, bindings_json, method, cj_in)
-                    if skey not in memo_states:
-                        memo_states.add(skey)
-                        n_out = len(out)
-                        mk_kw = dict(
-                            cur_url=url, mk_pc=int(pc), mk_full=url_full,
-                            mk_method=method, mk_bindings=bindings_json,
-                            mk_cookies=cj_in,
-                        )
-                        out.append(_out_row("memo", mk="mark", **mk_kw))
-                        for r in out[row_start:n_out]:
-                            m = dict(r)
-                            m["kind"] = "memo"
-                            m["mk"] = r["kind"]
-                            m["path_key"] = r["path_key"][len(path):]
-                            m.update(mk_kw)
-                            out.append(m)
+                    _emit_memo(
+                        out, memo_states, row_start, path, int(pc), url,
+                        url_full, bindings_json, method, cj_in,
+                    )
             if len(pdf):
                 last_url = pdf["url_canon"].iloc[-1]
                 carry = (
                     {last_url: fetched[last_url]} if last_url in fetched else {}
                 )
-            if timing:
-                _t_add("fused.eval", _time.time() - _t0)
-                _t0 = _time.time()
             if store_dir is not None and store_rows:
                 _write_store_batch(store_dir, store_rows, batch_idx)
-                if timing:
-                    _t_add("fused.store_write", _time.time() - _t0)
-                    _t0 = _time.time()
-            f = _frame(out)
-            if timing:
-                _t_add("fused.frame", _time.time() - _t0)
-            yield f
+            yield _frame(out)
 
     return fused
 
 
-def make_replay_fn(node_table: dict[int, NodeSpec], emit_memo: bool = False):
-    """Cogrouped store replay — the cache-hit half of a crawl round.
+def _emit_memo(
+    out: list[dict], memo_states: set, row_start: int, path: str, pc: int,
+    url: str, url_full, bindings_json, method: str, cj_in,
+) -> None:
+    """Eval-output cache rows: once per distinct input state per url,
+    duplicate the state's outputs (``out[row_start:]``) with suffix-only
+    paths + the state key — the memo sink later rounds JOIN against (JVM
+    concat of path prefixes) instead of re-running the page through Python
+    per replay branch. The 'mark' row records states with ZERO outputs, so
+    a join miss means "state never evaluated", not "state evaluated to
+    nothing". *memo_states* must live as long as the url does."""
+    skey = (pc, url_full, bindings_json, method, cj_in)
+    if skey in memo_states:
+        return
+    memo_states.add(skey)
+    n_out = len(out)
+    mk_kw = dict(
+        cur_url=url, mk_pc=pc, mk_full=url_full, mk_method=method,
+        mk_bindings=bindings_json, mk_cookies=cj_in,
+    )
+    out.append(_out_row("memo", mk="mark", **mk_kw))
+    for r in out[row_start:n_out]:
+        m = dict(r)
+        m["kind"] = "memo"
+        m["mk"] = r["kind"]
+        m["path_key"] = r["path_key"][len(path):]
+        m.update(mk_kw)
+        out.append(m)
 
-    ``replay_slim.groupby(url).cogroup(store.groupby(url)).applyInPandas``:
-    each group is ONE url — left = its slim replay request rows (no
-    bodies), right = its single store row (body + head + status). The page
-    body therefore crosses exactly one shuffle (the cogroup exchange of the
-    store's one-row-per-url side) and is evaluated in place against every
-    replaying branch — zero body amplification. The previous shape
-    (dropDuplicates over the body-carrying store, a body join against every
-    replay row, then a sortWithinPartitions of body×paths rows) moved each
-    body through three body-heavy operators and multiplied it per path;
-    at 63 KB mean pages that sort alone spilled gigabytes per round.
+
+def make_replay_fn(node_table: dict[int, NodeSpec], emit_memo: bool = False):
+    """Streamed store replay — the cache-hit half of a crawl round.
+
+    The crawler unions the round's slim replay request rows (``_src=1``,
+    no body) with each replayed url's single store/pages row (``_src=0``:
+    body + head), repartitions on ``url_canon`` and sorts each partition by
+    ``(url_canon, _src)``. ``replay.stream`` is the ``mapInPandas``
+    function over that stream: a body row sets the current url's body and
+    head, and the replay rows that follow are evaluated against it. The
+    page body crosses exactly one exchange, once per url, and is never
+    joined per path or duplicated; Python is entered once per Arrow batch,
+    not once per url. The url's state (body, head, eval memo, emitted memo
+    states) lives until the url changes, so a url whose rows straddle a
+    batch boundary is evaluated — and emits its memo rows — exactly once,
+    like the fused stage's ``carry``.
 
     Semantics identical to the fan-out cascade over store-joined bodies
-    (the memoized replay of browser-services.rkt:36-40): robots-blocked
-    branches (left._blk) see an empty body and no head; the store head's
-    Set-Cookie folds into each branch's jar before its children run.
+    (the memoized replay of browser-services.rkt:36-40): a url with no
+    store row replays with an empty body; robots-blocked branches
+    (``_blk``) see an empty body and no head; the store head's Set-Cookie
+    folds into each branch's jar before its children run.
 
     With ``emit_memo`` (memo-joinable programs), every state this replay
     evaluates ALSO emits eval-output-cache rows, exactly like the fused
@@ -545,88 +511,97 @@ def make_replay_fn(node_table: dict[int, NodeSpec], emit_memo: bool = False):
     depth) is evaluated in Python ONCE; every later round joins it
     JVM-side instead of re-reading the body. Robots-blocked branches never
     emit memo rows (their empty-body outputs would poison the unblocked
-    join, whose key does not carry the blocked bit)."""
+    join, whose key does not carry the blocked bit).
 
-    def replay(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        import time as _time
+    The returned callable is the per-url form ``replay(left, right)``:
+    left = one url's replay rows, right = its store rows (zero or one),
+    evaluated by the same row core as the stream."""
 
-        from ..kernel.cookies import jar_fold_head, jar_from_json, jar_to_json
+    from ..kernel.cookies import jar_fold_head, jar_from_json, jar_to_json
 
-        timing = _timing_enabled()
-        _t0 = _time.time()
-        out: list[dict] = []
-        if not len(left):
-            return _frame(out)
-        body = ""
-        head_json = None
-        if len(right):
-            b = right["body"].iloc[0]
-            body = b if isinstance(b, str) else ""
-            if "head" in right.columns:
-                h = right["head"].iloc[0]
-                head_json = h if isinstance(h, str) else None
+    def body_head(b, hj) -> tuple[str, tuple | None]:
+        return (
+            b if isinstance(b, str) else "",
+            tuple(json.loads(hj)) if isinstance(hj, str) and hj else None,
+        )
+
+    def eval_row(
+        out, memo, memo_states, body, head,
+        pc, url, url_full, bindings_json, path, method, cj, blk,
+    ) -> None:
+        """The one row-evaluation core: replay one request row against its
+        url's *body*/*head*; *memo*/*memo_states* live as long as the url."""
+        pc = int(pc)
+        url_full = url_full if isinstance(url_full, str) else None
+        bindings_json = bindings_json if isinstance(bindings_json, str) else None
+        method = method if isinstance(method, str) else "GET"
+        cj = cj if isinstance(cj, str) else None
+        path = path if isinstance(path, str) else ""
+        blk = bool(blk)
+        if blk:
+            body, head = "", None
+        cj_in = cj  # pre-fold jar: the memo key replay rows carry
+        if head is not None:
+            cj = jar_to_json(jar_fold_head(jar_from_json(cj), head, url_full or url))
+        row_start = len(out)
+        for j, child in enumerate(node_table[pc].child_ids):
+            _eval_memo(
+                memo, (child, url_full, bindings_json, method, cj, blk),
+                node_table[child], node_table, child,
+                url, url_full, body, bindings_json, path + _hx(j), out,
+                head=head, method=method, cookies_json=cj,
+            )
+        if emit_memo and not blk:
+            _emit_memo(
+                out, memo_states, row_start, path, pc, url,
+                url_full, bindings_json, method, cj_in,
+            )
+
+    def opt(pdf: pd.DataFrame, name: str, default=None):
+        return pdf[name] if name in pdf.columns else [default] * len(pdf)
+
+    def row_cols(pdf: pd.DataFrame) -> list:
+        return [
+            pdf["pc"], pdf["url_canon"], pdf["url_full"], pdf["bindings"],
+            pdf["path_key"], pdf["method"], opt(pdf, "cookies"),
+            opt(pdf, "_blk", False),
+        ]
+
+    def stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cur_url = None
+        body, head = "", None
         memo: dict = {}
         memo_states: set = set()
-        cookies_col = (
-            left["cookies"] if "cookies" in left.columns else [None] * len(left)
-        )
-        blk_col = left["_blk"] if "_blk" in left.columns else [False] * len(left)
-        for pc, url, url_full, bindings_json, path, method, cj, blk in zip(
-            left["pc"], left["url_canon"], left["url_full"], left["bindings"],
-            left["path_key"], left["method"], cookies_col, blk_col,
-        ):
-            pc = int(pc)
-            url_full = url_full if isinstance(url_full, str) else None
-            bindings_json = (
-                bindings_json if isinstance(bindings_json, str) else None
-            )
-            method = method if isinstance(method, str) else "GET"
-            cj = cj if isinstance(cj, str) else None
-            path = path or ""
-            blk = bool(blk)
-            b = "" if blk else body
-            hj = None if blk else head_json
-            head = tuple(json.loads(hj)) if hj else None
-            cj_in = cj  # pre-fold jar: the memo key replay rows carry
-            if head is not None:
-                cj = jar_to_json(
-                    jar_fold_head(jar_from_json(cj), head, url_full or url)
-                )
-            row_start = len(out)
-            for j, child in enumerate(node_table[pc].child_ids):
-                _eval_memo(
-                    memo, (child, url_full, bindings_json, method, cj, blk),
-                    node_table[child], node_table, child,
-                    url, url_full, b, bindings_json, path + _hx(j), out,
-                    head=head, method=method, cookies_json=cj,
-                )
-            if emit_memo and not blk:
-                skey = (pc, url_full, bindings_json, method, cj_in)
-                if skey not in memo_states:
-                    memo_states.add(skey)
-                    n_out = len(out)
-                    mk_kw = dict(
-                        cur_url=url, mk_pc=pc, mk_full=url_full,
-                        mk_method=method, mk_bindings=bindings_json,
-                        mk_cookies=cj_in,
-                    )
-                    out.append(_out_row("memo", mk="mark", **mk_kw))
-                    for r in out[row_start:n_out]:
-                        m = dict(r)
-                        m["kind"] = "memo"
-                        m["mk"] = r["kind"]
-                        m["path_key"] = r["path_key"][len(path):]
-                        m.update(mk_kw)
-                        out.append(m)
-        if timing:
-            _t_add("replay.eval", _time.time() - _t0)
-            _t_add("replay.groups", 1e-9)
-            _t0 = _time.time()
-        f = _frame(out)
-        if timing:
-            _t_add("replay.frame", _time.time() - _t0)
-        return f
+        for pdf in batches:
+            out: list[dict] = []
+            for src, b, hj, *row in zip(
+                pdf["_src"], opt(pdf, "body"), opt(pdf, "head"), *row_cols(pdf)
+            ):
+                url = row[1]
+                if url != cur_url:
+                    cur_url = url
+                    body, head = "", None
+                    memo.clear()
+                    memo_states.clear()
+                if src == 0:
+                    body, head = body_head(b, hj)
+                else:
+                    eval_row(out, memo, memo_states, body, head, *row)
+            yield _frame(out)
 
+    def replay(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        body, head = "", None
+        if len(right):
+            first = right.iloc[0]
+            body, head = body_head(first["body"], first.get("head"))
+        out: list[dict] = []
+        memo: dict = {}
+        memo_states: set = set()
+        for row in zip(*row_cols(left)):
+            eval_row(out, memo, memo_states, body, head, *row)
+        return _frame(out)
+
+    replay.stream = stream
     return replay
 
 

@@ -625,11 +625,12 @@ def xpath(html: str | list[str], query: str) -> list[str]:
         for sub in html:
             out.extend(xpath(sub, query))
         return out
+    q = query.strip()
     if _fast_enabled():
-        fast = _fast_xpath(html, query.strip(), _kernel_xpath_str)
+        fast = _fast_xpath(html, q, _kernel_xpath_str)
         if fast is not None:
             return list(fast)
-    return _kernel_xpath_str(html, query)
+    return _kernel_xpath_str(html, q)
 
 
 _TRIM_CHARS = " \t\n\r\f\v"

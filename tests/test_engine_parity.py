@@ -589,13 +589,14 @@ def test_resume_bloom_rebuild_is_distributed_and_complete(spark, corpus, tmp_pat
 
 
 def test_empty_replay_skips_store_scan(spark, tmp_path):
-    """AQE's empty-relation propagation rewrites a broadcast semi-join with
-    an empty probe side to an EmptyRelation, so a body-bearing scan behind
-    it never runs. The engine's primary gate is now driver-side (the fused
-    round prunes the cogroup branch when the seg=pyrep parquet footers say
-    0 rows, crawler.py _round_fused); this pins the Spark behavior that
-    backstops it — a non-empty pyrep segment whose url set happens to miss
-    the store entirely still never decompresses store body chunks."""
+    """The engine's primary gate against a useless body-bearing store scan
+    is driver-side (the fused round plans no replay branch when the
+    seg=pyrep parquet footers say 0 rows, crawler.py _round_fused). This
+    pins the Spark behavior that backstops it on the replay's own shape
+    (union of the semi-joined store with the replay rows, url_canon
+    repartition, sort, mapInPandas): with an empty replay side, AQE turns
+    the broadcast semi-join into an empty relation and drops it from the
+    union, so the final plan never scans the store at all."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -615,14 +616,17 @@ def test_empty_replay_skips_store_scan(spark, tmp_path):
         "url_canon", "left_semi",
     )
 
-    def rep(lk, rk):
-        return pd.DataFrame({"url_canon": pd.Series(dtype="object"),
-                             "n": pd.Series(dtype="int64")})
+    def rep(batches):
+        for pdf in batches:
+            yield pd.DataFrame({"url_canon": pdf["url_canon"],
+                                "n": pd.Series([1] * len(pdf), dtype="int64")})
 
     replayed = (
-        empty.groupby("url_canon")
-        .cogroup(store_src.groupby("url_canon"))
-        .applyInPandas(rep, "url_canon string, n long")
+        store_src.withColumn("_src", F.lit(0))
+        .unionByName(empty.withColumn("_src", F.lit(1)), allowMissingColumns=True)
+        .repartition(4, "url_canon")
+        .sortWithinPartitions("url_canon", "_src")
+        .mapInPandas(rep, "url_canon string, n long")
     )
     fresh = spark.range(5).select(
         F.concat(F.lit("z"), F.col("id")).alias("url_canon"),
@@ -634,7 +638,151 @@ def test_empty_replay_skips_store_scan(spark, tmp_path):
     assert len(out.collect()) == 5
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan, plan
-    assert "EmptyRelation" in plan, plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert "== Final Plan ==" in final and "MapInPandas" in final, plan
+    scans = [ln for ln in final.splitlines() if "FileScan" in ln]
+    assert not any(store_path in ln for ln in scans), plan
+
+
+def _replay_case():
+    """A program plus url-sorted store rows and replay rows covering every
+    replay shape: a url whose rows straddle batches, a url with no store
+    row (empty body), robots-blocked rows next to unblocked ones, and a
+    head carrying Set-Cookie (the jar folds into the emitted requests)."""
+    import pandas as pd
+
+    from boris_spark.engine.compiler import compile_program
+
+    program = Go(
+        Lit(["http://r.test/a"]),
+        Extract(First(XpathTextE("//p"))),
+        Go(XpathE("//td[@class='l']/a/@href/text()"), Extract(UrlE())),
+    )
+    node_table = compile_program(program)
+    pc = program.node_id
+    link = "<td class='l'><a href='/{0}'>{0}</a></td>"
+    page = "<html><body><p>{0}</p>{1}</body></html>"
+    store = pd.DataFrame({
+        "url_canon": ["http://r.test/a", "http://r.test/b", "http://r.test/d"],
+        "body": [
+            page.format("a", link.format("b") + link.format("c")),
+            page.format("b", link.format("a")),
+            page.format("d", link.format("a")),
+        ],
+        "head": [
+            json.dumps(["HTTP/1.1 200 OK",
+                        [["Set-Cookie", "tok=T1; Path=/"]]]),
+            None,
+            json.dumps(["HTTP/1.1 200 OK", []]),
+        ],
+    })
+    jar = json.dumps([["old", "1", "r.test", "/"]])
+    rows = []
+    for url, n, blk in (
+        ("http://r.test/a", 5, False), ("http://r.test/b", 2, False),
+        ("http://r.test/c", 2, False), ("http://r.test/d", 4, None),
+    ):
+        for i in range(n):
+            rows.append({
+                "pc": pc, "url_canon": url,
+                "url_full": url + ("?x=1" if i % 3 == 2 else ""),
+                "bindings": None if i % 2 else '{"k":1}',
+                "path_key": f"{i:08x}", "method": "GET",
+                "cookies": jar if i == 1 else None,
+                "_blk": bool(i % 2) if blk is None else blk,
+            })
+    return node_table, store, pd.DataFrame(rows)
+
+
+def _row_multiset(frames):
+    import collections
+
+    c = collections.Counter()
+    for f in frames:
+        f = f.astype(object).where(f.notna(), None)
+        c.update(tuple(r) for r in f.itertuples(index=False))
+    return c
+
+
+@pytest.mark.parametrize("emit_memo", [False, True])
+def test_replay_stream_matches_per_url(emit_memo):
+    """``replay.stream`` over the url-sorted merged stream (store row
+    ``_src=0`` before the url's replay rows ``_src=1``), cut into Arrow
+    batches at every split point and at every batch size, emits exactly
+    the row multiset of the per-url ``replay(left, right)`` — so url state
+    (body, head, eval memo, emitted memo states) survives batch
+    boundaries and no memo row is ever emitted twice."""
+    import pandas as pd
+
+    from boris_spark.engine.udfs import make_replay_fn
+
+    node_table, store, left = _replay_case()
+    replay = make_replay_fn(node_table, emit_memo=emit_memo)
+    want = _row_multiset(
+        replay(g, store[store["url_canon"] == u])
+        for u, g in left.groupby("url_canon", sort=True)
+    )
+    assert want and sum(want.values()) > len(left)
+    if emit_memo:
+        assert any(r[0] == "memo" for r in want)
+    merged = (
+        pd.concat([store.assign(_src=0), left.assign(_src=1)], ignore_index=True)
+        .sort_values(["url_canon", "_src"], kind="stable")
+        .reset_index(drop=True)
+    )
+    n = len(merged)
+    cuts = [list(range(0, n, k)) + [n] for k in range(1, n + 1)]
+    cuts += [[0, i, n] for i in range(1, n)]
+    for bounds in cuts:
+        batches = [merged.iloc[a:b] for a, b in zip(bounds, bounds[1:])]
+        got = _row_multiset(replay.stream(iter(batches)))
+        assert got == want, bounds
+        memo = [r for r in got.elements() if r[0] == "memo"]
+        assert len(memo) == len(set(memo)), bounds
+
+
+def test_replay_straddles_arrow_batches(spark, tmp_path):
+    """A hub url fetched at the root navigate in round 0 is re-linked at
+    the inner navigate in round 1: a memo miss, so every branch replays it
+    through the streamed Python replay. With maxRecordsPerBatch=2 its
+    replay rows span many Arrow batches; the output must still match the
+    oracle and the memo sink must hold no duplicate row."""
+    hub, leaf = "http://h.test/hub", "http://h.test/leaf"
+    link = "<td class='l'><a href='{0}'>x</a></td>"
+    site = {
+        hub: f"<html><body><p>hub</p>{link.format(hub)}{link.format(leaf)}</body></html>",
+        leaf: f"<html><body><p>leaf</p>{link.format(hub)}</body></html>",
+    }
+
+    def fetch_fn(urls):
+        return [(site.get(u), 200 if u in site else 404) for u in urls]
+
+    program = Go(
+        Lit([hub] * 5 + [leaf] * 5),
+        Extract(First(XpathTextE("//p"))),
+        Go(XpathE("//td[@class='l']/a/@href/text()"),
+           Extract(First(XpathTextE("//p")))),
+    )
+    oracle = spider(program, SnapshotFetcher(site))
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    try:
+        eng = CrawlEngine(
+            spark, None, str(tmp_path / "w"), politeness_k=None,
+            fetch_mode="callable", fetch_fn=fetch_fn,
+        )
+        eng.run(program, max_rounds=5)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    # round 1: hub ×10 + leaf ×5 replay rows, all through the Python replay
+    replayed = [
+        eng.table.round_metrics(r).get("py_replay_rows")
+        for r in eng.table.committed_rounds()
+    ]
+    assert replayed[:2] == [0, 15], replayed
+    assert_parity(oracle, eng)
+    memo = eng._read_sink("memo").drop("round")
+    assert memo.count() == memo.distinct().count() > 0
 
 
 def test_webgen_uniform_host_dist(monkeypatch):

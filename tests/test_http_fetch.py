@@ -155,3 +155,26 @@ def test_live_http_bench_tier_politeness(spark):
     assert out["politeness_held"] is True
     assert out["max_host_round_fetches"] <= 3
     assert out["rounds"] >= 5  # budget binds: 1,2,3,3,3,3 per host
+
+
+def test_live_http_bench_dead_server_raises(monkeypatch):
+    """A live server that dies before writing its port makes the bench
+    tier raise a clear error at once, and the child is reaped."""
+    import subprocess
+    import sys as _sys
+
+    _sys.path.insert(0, __file__.rsplit("/tests/", 1)[0])
+    from bench import live_http_bench
+
+    procs = []
+    popen = subprocess.Popen
+
+    def spy(*a, **kw):
+        procs.append(popen(*a, stderr=subprocess.DEVNULL, **kw))
+        return procs[-1]
+
+    monkeypatch.setattr(subprocess, "Popen", spy)
+    # a non-integer page count makes the server exit during start-up
+    with _pytest.raises(RuntimeError, match="exited"):
+        live_http_bench(None, n_hosts=1, pages_per_host="bad", budget=1)
+    assert len(procs) == 1 and procs[0].returncode not in (None, 0)

@@ -128,6 +128,28 @@ def test_xpath_list_input_flatten():
     ) == ["<b>b1</b>", "<b>b2</b>", "<b>pb3</b>", "<b>b4</b>"]
 
 
+def test_xpath_query_whitespace_normalized(monkeypatch):
+    """A whitespace-padded query is normalized once: the fast path and the
+    kernel fallback both see the stripped query and answer identically."""
+    from boris_spark.kernel import htmlkit
+
+    seen = []
+    kernel = htmlkit._kernel_xpath_str
+
+    def spy(html, query):
+        seen.append(query)
+        return kernel(html, query)
+
+    monkeypatch.setattr(htmlkit, "_kernel_xpath_str", spy)
+    page = "<title>t</title>" + TEST_HTML
+    for fast in (False, True):
+        monkeypatch.setattr(htmlkit, "_FAST_HTML", fast)
+        htmlkit._fast_walk.cache_clear()
+        for q in ("//p", "//title/text()"):
+            assert xpath(page, f" \t{q}\n ") == xpath(page, q) == kernel(page, q)
+    assert seen and all(q == q.strip() for q in seen), seen
+
+
 def test_xpath_empty_text_skipped():
     # xpath.rkt:73
     assert xpath("<p></p><p></p>", "//p/text()") == []
